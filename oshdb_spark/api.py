@@ -332,14 +332,16 @@ class _MapReducer:
 
     def timestamps(self, *args) -> "_MapReducer":
         """timestamps([t...]) | timestamps(start, end) |
-        timestamps(start, end, "P1M") — ISO strings or epoch micros
-        (OSHDBTimestamps, MapReducer.java:280-386)."""
+        timestamps(start, end, "P1M") — ISO strings or epoch seconds, the
+        unit of the entities' ``ts`` (OSHDBTimestamps,
+        MapReducer.java:280-386).  Integers pass through unchanged; the
+        ``timestamps`` module works in epoch micros, so ISO forms and
+        period steps are converted here."""
         if len(args) == 1 and isinstance(args[0], (list, tuple)):
-            ts = sorted(parse_iso(t) for t in args[0])
-        elif len(args) == 2:
-            ts = make_timestamps(args[0], args[1])
-        elif len(args) == 3:
-            ts = make_timestamps(args[0], args[1], args[2])
+            ts = sorted(_epoch_seconds(t) for t in args[0])
+        elif len(args) in (2, 3):
+            start, end = (_epoch_seconds(t) * _MICROS for t in args[:2])
+            ts = [t // _MICROS for t in make_timestamps(start, end, *args[2:])]
         else:
             raise ValueError("timestamps() takes a list, (start, end) or (start, end, period)")
         return self._with(ts=tuple(ts))
@@ -810,6 +812,17 @@ class _MapReducer:
         )
 
 
+_MICROS = 1_000_000
+
+
+def _epoch_seconds(t) -> int:
+    """An API timestamp as epoch seconds: ints pass through, ISO strings
+    and datetimes are parsed (timestamps.parse_iso returns micros)."""
+    if isinstance(t, int):
+        return t
+    return parse_iso(t) // _MICROS
+
+
 def _freeze(obj):
     if isinstance(obj, dict):
         return tuple(sorted((k, _freeze(v)) for k, v in obj.items()))
@@ -840,6 +853,7 @@ class SnapshotView(_MapReducer):
             bbox_deg=self.state.bbox_deg,
             interpreter=self.db.interpreter,
             keep_bbox=self.state.polygon is not None,
+            types=self._type_set(),
         )
         df = self._attach_metric_columns(df)
         # version/geometry predicate on the UNCLIPPED state
@@ -883,6 +897,10 @@ class ContributionView(_MapReducer):
         for n in alive_nodes:
             c = compile_with_packed_geom(n)
             match = c if match is None else (match & c)
+        types = self._type_set()
+        # nodes are never border rows (a point bbox is inside or outside)
+        # and carry JVM-built WKT: node-only bbox clips stay in the JVM
+        nodes_only = not types & {"way", "relation"}
         # the AOI participates in ALIVENESS: a geometry moving out of the
         # bbox/polygon is a DELETION, moving in a CREATION
         # (CellIterator.java:665-679 "geometry became empty in AOI").
@@ -917,15 +935,15 @@ class ContributionView(_MapReducer):
             # 1-byte marker for outside/empty rows; packed bytes (border)
             # or the unclipped binary (fully inside, clip == identity).
             border = has_b & ~inside & ~outside
-            cu = clip_udf(self.state.bbox_deg)
-            clip_col = (
-                F.when(border, cu(F.when(border, F.col("geom")))["clipped_geom"])
-                .when(
-                    has_b & inside,
-                    F.coalesce(F.col("geom"), F.col("wkt").cast("binary")),
-                )
-                .otherwise(F.lit(b"\x00"))
-            )
+            unclipped = F.coalesce(F.col("geom"), F.col("wkt").cast("binary"))
+            if nodes_only:
+                clip_col = F.when(has_b & inside, unclipped)
+            else:
+                cu = clip_udf(self.state.bbox_deg)
+                clip_col = F.when(
+                    border, cu(F.when(border, F.col("geom")))["clipped_geom"]
+                ).when(has_b & inside, unclipped)
+            clip_col = clip_col.otherwise(F.lit(b"\x00"))
             # classify materializes clip_col as __clip_bin before applying
             # the aliveness match, so the clip UDF runs exactly once
             aoi = F.length(F.col("__clip_bin")) > 5
@@ -977,7 +995,6 @@ class ContributionView(_MapReducer):
             )
             aoi = F.length(F.col("__clip_bin")) > 5
             match = aoi if match is None else (match & aoi)
-        types = self._type_set()
         df = contribution_view(
             self._osh_prefilter(self._entities(), alive_nodes),
             t0,
@@ -1038,17 +1055,16 @@ class ContributionView(_MapReducer):
             empty_wkt = F.concat(
                 F.regexp_extract("wkt", "^[A-Z]+", 0), F.lit(" EMPTY")
             )
-            cu = clip_udf(self.state.bbox_deg)
-            df = (
-                df.withColumn("c", cu(F.when(border, F.col("geom"))))
-                .withColumn(
-                    "clipped_wkt",
-                    F.when(~has_b | inside, F.col("wkt"))
-                    .when(outside, empty_wkt)
-                    .otherwise(to_wkt_udf()(F.col("c.clipped_geom"))),
-                )
-                .drop("c")
+            clipped_wkt = F.when(~has_b | inside, F.col("wkt")).when(
+                outside, empty_wkt
             )
+            if not nodes_only:
+                cu = clip_udf(self.state.bbox_deg)
+                df = df.withColumn("c", cu(F.when(border, F.col("geom"))))
+                clipped_wkt = clipped_wkt.otherwise(
+                    to_wkt_udf()(F.col("c.clipped_geom"))
+                )
+            df = df.withColumn("clipped_wkt", clipped_wkt).drop("c")
         return df
 
 

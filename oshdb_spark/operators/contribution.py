@@ -660,6 +660,7 @@ def classify_contributions(
     states: DataFrame,
     match_col: F.Column | None = None,
     clip_col: F.Column | None = None,
+    nodes_only: bool = False,
 ) -> DataFrame:
     """lag() window + when/otherwise classification (CellIterator.java:586-726).
 
@@ -676,6 +677,10 @@ def classify_contributions(
     the clip box yields a contribution row with EMPTY activities.  The
     column is materialized once ("__clip_bin") so the clip UDF inside it
     runs one Arrow pass; aliveness gates may reference it by name.
+
+    ``nodes_only``: every state is a node, so no packed geometry reaches
+    the output and the WKT columns stay the JVM-built strings (no
+    to_wkt_udf pass).
     """
     if clip_col is not None:
         states = states.withColumn("__clip_bin", clip_col)
@@ -730,21 +735,23 @@ def classify_contributions(
         out = out.drop("__clip_bin")
     # output boundary: packed -> WKT exactly once, only for rows that
     # survived classification (nodes keep their JVM-built strings)
-    wudf_wkt = to_wkt_udf()
+    wkt, prev_wkt = F.col("wkt"), F.col("prev_wkt")
+    if not nodes_only:
+        wudf_wkt = to_wkt_udf()
+        wkt = F.coalesce(wkt, wudf_wkt(F.col("geom")))
+        prev_wkt = F.coalesce(prev_wkt, wudf_wkt(F.col("prev_geom")))
     return out.select(
         "doc_id", "type", "id", "version", "visible", "tags",
         F.col("event_ts").alias("ts"),
         F.col("event_changeset").alias("changeset"),
         F.col("event_uid").alias("contrib_uid"),
         "own_change", "contrib_types",
-        F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom"))).alias("wkt"),
+        wkt.alias("wkt"),
         # packed geometry rides along (null for nodes) so downstream AOI
         # clip stages decode bytes instead of re-parsing WKT
         "geom",
         "area", "length",
-        F.coalesce(
-            F.col("prev_wkt"), wudf_wkt(F.col("prev_geom"))
-        ).alias("prev_wkt"),
+        prev_wkt.alias("prev_wkt"),
         "prev_tags", "prev_version",
         # geometry bbox (null for empty): lets consumers classify against
         # an AOI JVM-side and invoke Python clip UDFs on border rows only
@@ -796,10 +803,12 @@ def contribution_view(
     type-narrowing, MapReducer.java:1910-1935); when None all three kinds
     are assumed — pass the narrowed set explicitly to skip the way/relation
     member-resolution machinery (an extra full-table type-discovery scan
-    here would cost more than it saves at scale).
+    here would cost more than it saves at scale).  With nodes only, no
+    Python UDF converts geometry to WKT: node WKT is built in the JVM.
     """
     if types is None:
         types = {"node", "way", "relation"}
+    nodes_only = not set(types) & {"way", "relation"}
     nodes = entities.filter(F.col("type") == "node")
 
     states: DataFrame | None = None
@@ -843,7 +852,7 @@ def contribution_view(
                   "g_squareness"):
             states = states.withColumn(c, m[c])
     classified = classify_contributions(
-        states, match_col=osm_filter, clip_col=clip_col
+        states, match_col=osm_filter, clip_col=clip_col, nodes_only=nodes_only
     )
     # half-open [t_start, t_end): OSHDBTimestampInterval.includes is
     # from <= t < to, so a contribution at exactly t_end is excluded

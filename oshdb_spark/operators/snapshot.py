@@ -330,47 +330,10 @@ SNAPSHOT_COLUMNS = [
 ]
 
 
-def snapshot_view(
-    entities: DataFrame,
-    timestamps: list[int],
-    bbox_deg: tuple[float, float, float, float] | None = None,
-    interpreter: TagInterpreter | None = None,
-    keep_empty: bool = False,
-    include_old_style_multipolygons: bool = False,
-    keep_bbox: bool = False,
-) -> DataFrame:
-    """The full snapshot view over all three entity kinds.
-
-    ``keep_bbox``: retain the internal minx/miny/maxx/maxy geometry-bbox
-    columns in the output so downstream AOI stages can classify JVM-side
-    (polygon overlap gating) — callers drop them before the public result.
-
-    Returns one row per (entity, snapshot timestamp) where the entity exists,
-    is visible, and (if bbox_deg given) its clipped geometry is non-empty;
-    adds clipped_wkt/clipped_area/clipped_length when clipping.
-
-    ``include_old_style_multipolygons`` (CellIterator.java:102-205
-    constructor flag, :330-380 handling): relations with exactly one
-    outer way and no interesting relation tags emit only their INNER
-    HOLES as geometry (the fix-up applied against the outer way's own
-    result), and their tags are substituted with the outer way's tags so
-    downstream filters test the way, as the reference does.
-    """
-    node_snaps = node_snapshots(entities, timestamps)
-    lon_deg = F.col("lon").cast("double") / 1e7
-    lat_deg = F.col("lat").cast("double") / 1e7
-    nodes_out = node_snaps.filter("visible").select(
-        "doc_id", "type", "id", "version", "snap_ts", "visible", "tags",
-        "changeset", "uid", "last_mod_ts", "lon", "lat", "wkt",
-        F.lit(None).cast("binary").alias("geom"),
-        F.lit(0.0).alias("area"), F.lit(0.0).alias("length"),
-        lon_deg.alias("minx"), lat_deg.alias("miny"),
-        lon_deg.alias("maxx"), lat_deg.alias("maxy"),
-    )
-
-    wl = way_lines(entities, node_snaps, timestamps)
+def _way_rows(wl: DataFrame, interpreter: TagInterpreter | None) -> DataFrame:
+    """Visible way snapshots with their built geometry, in view columns."""
     wudf = way_geometry_udf(interpreter)
-    ways_out = (
+    return (
         wl.filter("visible")
         .withColumn("g", wudf("visible", "tags", "refs", "line"))
         .select(
@@ -389,6 +352,17 @@ def snapshot_view(
         )
     )
 
+
+def _relation_rows(
+    entities: DataFrame,
+    wl: DataFrame,
+    node_snaps: DataFrame,
+    timestamps: list[int],
+    interpreter: TagInterpreter | None,
+    include_old_style_multipolygons: bool,
+) -> DataFrame:
+    """Visible relation snapshots with their built geometry, in view
+    columns (see snapshot_view for the old-style multipolygon flag)."""
     rudf = relation_geometry_udf(interpreter)
 
     def _build_rels(rl_df: DataFrame) -> DataFrame:
@@ -497,11 +471,76 @@ def snapshot_view(
             )
             .drop("__h", "__outer_ref", "__way_tags", "__old")
         )
+    return rels_out
 
-    out = nodes_out.unionByName(ways_out).unionByName(rels_out)
+
+def snapshot_view(
+    entities: DataFrame,
+    timestamps: list[int],
+    bbox_deg: tuple[float, float, float, float] | None = None,
+    interpreter: TagInterpreter | None = None,
+    keep_empty: bool = False,
+    include_old_style_multipolygons: bool = False,
+    keep_bbox: bool = False,
+    types: set[str] | None = None,
+) -> DataFrame:
+    """The snapshot view over the requested entity kinds.
+
+    ``keep_bbox``: retain the internal minx/miny/maxx/maxy geometry-bbox
+    columns in the output so downstream AOI stages can classify JVM-side
+    (polygon overlap gating) — callers drop them before the public result.
+
+    Returns one row per (entity, snapshot timestamp) where the entity exists,
+    is visible, and (if bbox_deg given) its clipped geometry is non-empty;
+    adds clipped_wkt/clipped_area/clipped_length when clipping.
+
+    ``include_old_style_multipolygons`` (CellIterator.java:102-205
+    constructor flag, :330-380 handling): relations with exactly one
+    outer way and no interesting relation tags emit only their INNER
+    HOLES as geometry (the fix-up applied against the outer way's own
+    result), and their tags are substituted with the outer way's tags so
+    downstream filters test the way, as the reference does.
+
+    ``types`` restricts the entity kinds emitted (the reference's DNF
+    type-narrowing, MapReducer.java:1910-1935); None means all three.
+    Member kinds are still resolved (ways read node snapshots, relations
+    read way lines and node snapshots) but only the requested kinds are
+    emitted.  Without relations, relation member resolution and its
+    nesting probe job are skipped; with nodes only, the way and relation
+    branches are not planned at all and the bbox-clip/WKT stage runs no
+    Python UDF (nodes are never border rows and carry JVM-built WKT).
+    """
+    types = set(types) if types is not None else {"node", "way", "relation"}
+    nodes_only = not types & {"way", "relation"}
+    node_snaps = node_snapshots(entities, timestamps)
+    lon_deg = F.col("lon").cast("double") / 1e7
+    lat_deg = F.col("lat").cast("double") / 1e7
+    nodes_out = node_snaps.filter("visible").select(
+        "doc_id", "type", "id", "version", "snap_ts", "visible", "tags",
+        "changeset", "uid", "last_mod_ts", "lon", "lat", "wkt",
+        F.lit(None).cast("binary").alias("geom"),
+        F.lit(0.0).alias("area"), F.lit(0.0).alias("length"),
+        lon_deg.alias("minx"), lat_deg.alias("miny"),
+        lon_deg.alias("maxx"), lat_deg.alias("maxy"),
+    )
+
+    parts = [nodes_out] if "node" in types else []
+    if not nodes_only:
+        wl = way_lines(entities, node_snaps, timestamps)
+        if "way" in types:
+            parts.append(_way_rows(wl, interpreter))
+        if "relation" in types:
+            parts.append(_relation_rows(
+                entities, wl, node_snaps, timestamps, interpreter,
+                include_old_style_multipolygons,
+            ))
+    if not parts:  # empty type set: a typed empty frame
+        parts = [nodes_out.filter(F.lit(False))]
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
     if not keep_empty:
         out = out.filter(~is_empty_geom_cols(F.col("geom"), F.col("wkt")))
-    wudf_wkt = to_wkt_udf()
     if bbox_deg is not None:
         # JVM-side classification against the geometry bbox columns
         # (CellIterator.java:417-459 short-circuits, columnar): fully
@@ -532,50 +571,58 @@ def snapshot_view(
         empty_wkt = F.concat(
             F.regexp_extract("wkt", "^[A-Z]+", 0), F.lit(" EMPTY")
         )
-        out = (
-            out.withColumn(
+        if nodes_only:
+            # no border rows, so no clip: typed nulls stand in for the
+            # clip UDF's output, which the branches below never reach
+            c_geom = c_area = c_length = F.lit(None)
+        else:
+            out = out.withColumn(
                 "c", clip_udf(bbox_deg)(F.when(border, F.col("geom")))
             )
-            .select(
-                "*",
-                F.when(~has_b | inside, F.col("geom"))
-                .when(outside, empty_geom)
-                .otherwise(F.col("c.clipped_geom"))
-                .alias("clipped_geom"),
-                F.when(F.col("geom").isNull() & (~has_b | inside), F.col("wkt"))
-                .when(F.col("geom").isNull() & outside, empty_wkt)
-                .alias("clipped_wkt"),
-                F.when(~has_b | inside, F.col("area"))
-                .when(outside, F.lit(0.0))
-                .otherwise(F.col("c.clipped_area"))
-                .alias("clipped_area"),
-                F.when(~has_b | inside, F.col("length"))
-                .when(outside, F.lit(0.0))
-                .otherwise(F.col("c.clipped_length"))
-                .alias("clipped_length"),
+            c_geom, c_area, c_length = (
+                F.col("c.clipped_geom"), F.col("c.clipped_area"),
+                F.col("c.clipped_length"),
             )
-            .drop("c")
-        )
+        out = out.select(
+            "*",
+            F.when(~has_b | inside, F.col("geom"))
+            .when(outside, empty_geom)
+            .otherwise(c_geom)
+            .alias("clipped_geom"),
+            F.when(F.col("geom").isNull() & (~has_b | inside), F.col("wkt"))
+            .when(F.col("geom").isNull() & outside, empty_wkt)
+            .alias("clipped_wkt"),
+            F.when(~has_b | inside, F.col("area"))
+            .when(outside, F.lit(0.0))
+            .otherwise(c_area)
+            .alias("clipped_area"),
+            F.when(~has_b | inside, F.col("length"))
+            .when(outside, F.lit(0.0))
+            .otherwise(c_length)
+            .alias("clipped_length"),
+        ).drop("c")
         if not keep_empty:
             out = out.filter(
                 ~is_empty_geom_cols(F.col("clipped_geom"), F.col("clipped_wkt"))
             )
-        # output boundary: packed -> WKT exactly once, for surviving rows
-        # only; identity-clipped rows reuse the unclipped string (binary
-        # equality is a JVM compare)
+        if not nodes_only:
+            # output boundary: packed -> WKT exactly once, for surviving
+            # rows only; identity-clipped rows reuse the unclipped string
+            # (binary equality is a JVM compare)
+            wudf_wkt = to_wkt_udf()
+            out = out.withColumn(
+                "wkt", F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom")))
+            ).withColumn(
+                "clipped_wkt",
+                F.coalesce(
+                    F.col("clipped_wkt"),
+                    F.when(F.col("clipped_geom") == F.col("geom"), F.col("wkt")),
+                    wudf_wkt(F.col("clipped_geom")),
+                ),
+            )
+    elif not nodes_only:
         out = out.withColumn(
-            "wkt", F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom")))
-        ).withColumn(
-            "clipped_wkt",
-            F.coalesce(
-                F.col("clipped_wkt"),
-                F.when(F.col("clipped_geom") == F.col("geom"), F.col("wkt")),
-                wudf_wkt(F.col("clipped_geom")),
-            ),
-        )
-    else:
-        out = out.withColumn(
-            "wkt", F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom")))
+            "wkt", F.coalesce(F.col("wkt"), to_wkt_udf()(F.col("geom")))
         )
     if not keep_bbox:
         out = out.drop("minx", "miny", "maxx", "maxy")

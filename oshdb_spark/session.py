@@ -9,6 +9,55 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+def _package_sources(pkg_dir: str) -> list[tuple[str, str]]:
+    """(absolute path, archive name) of every package .py file, sorted."""
+    out = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                rel = os.path.join("oshdb_spark", os.path.relpath(full, pkg_dir))
+                out.append((full, rel))
+    return sorted(out, key=lambda fr: fr[1])
+
+
+def package_zip(tmp_dir: str | None = None) -> str:
+    """Path of a zip of the oshdb_spark sources in ``tmp_dir`` (default:
+    the temp dir), named by a hash of those sources.
+
+    Every process with the same sources shares one file: it is written
+    once, through a private temp file renamed into place (``os.replace``
+    is atomic), so concurrent writers never expose a partial zip and
+    repeated runs leave no per-process copies behind.
+    """
+    import hashlib
+
+    import oshdb_spark
+
+    pkg_dir = os.path.dirname(os.path.abspath(oshdb_spark.__file__))
+    sources = _package_sources(pkg_dir)
+    h = hashlib.sha256()
+    for full, rel in sources:
+        h.update(rel.encode())
+        with open(full, "rb") as fh:
+            h.update(hashlib.sha256(fh.read()).digest())
+    tmp_dir = tmp_dir or tempfile.gettempdir()
+    zpath = os.path.join(tmp_dir, f"oshdb_spark_{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(zpath):
+        fd, part = tempfile.mkstemp(suffix=".zip.part", dir=tmp_dir)
+        try:
+            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+                for full, rel in sources:
+                    z.write(full, rel)
+            os.replace(part, zpath)
+        except BaseException:
+            os.unlink(part)
+            raise
+    return zpath
+
+
 def ensure_package_on_workers(spark: SparkSession | None = None) -> None:
     """Ship oshdb_spark to executor Pythons via addPyFile (idempotent).
 
@@ -23,25 +72,7 @@ def ensure_package_on_workers(spark: SparkSession | None = None) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_oshdb_spark_shipped", False):
         return
-    import oshdb_spark
-
-    pkg_dir = os.path.dirname(os.path.abspath(oshdb_spark.__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"oshdb_spark_auto_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "oshdb_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        z.write(full, rel)
-    sc.addPyFile(zpath)
+    sc.addPyFile(package_zip())
     sc._oshdb_spark_shipped = True
 
 

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oshdb_spark.api import OSHDB, ContributionView, SnapshotView
-from oshdb_spark.filters.dsl import TagTranslator
+from oshdb_spark.filters.dsl import TagTranslator, parse_filter
 from oshdb_spark.operators.snapshot import snapshot_view
 from oshdb_spark.timestamps import MONTHLY, YEARLY, parse_iso, timestamps
 
@@ -405,3 +405,117 @@ def test_polygon_aoi_contribution_aliveness(moving_node_db):
     assert rows == {
         100: ["CREATION"], 200: ["DELETION"], 300: ["CREATION"]
     }
+
+
+def test_bbox_aoi_node_contribution_aliveness(moving_node_db):
+    """The node-only bbox path (no clip UDF: a point is inside or outside)
+    classifies like the general one and emits the clipped WKT."""
+    df = (
+        ContributionView.on(moving_node_db)
+        .timestamps([0, 1000])
+        .area_of_interest(bbox=(0.0, 0.0, 20.0, 20.0))
+        .filter("type:node")
+        .dataframe()
+    )
+    rows = {
+        r["ts"]: (list(r["contrib_types"]), r["clipped_wkt"])
+        for r in df.collect()
+    }
+    assert rows == {
+        100: (["CREATION"], "POINT (10.0 10.0)"),
+        200: (["DELETION"], "POINT EMPTY"),
+        300: (["CREATION"], "POINT (15.0 15.0)"),
+    }
+
+
+# ---------------------------------------------------------------------------
+# type narrowing end to end: a DSL filter narrows the planned entity kinds;
+# the same predicate as a raw Column carries no type set, so it runs the
+# full three-kind view — both must return the same rows
+# ---------------------------------------------------------------------------
+
+NARROW_BBOX = (8.0, 49.0, 9.2, 49.8)
+
+
+def _rows(df):
+    def norm(v):
+        return sorted(v.items()) if isinstance(v, dict) else v
+
+    rows = [
+        tuple((k, norm(v)) for k, v in sorted(r.asDict().items()))
+        for r in df.collect()
+    ]
+    return sorted(rows, key=lambda t: [
+        v for k, v in t if k in ("type", "id", "version", "snap_ts", "ts")
+    ])
+
+
+@pytest.mark.parametrize(
+    "flt", ["type:node", "type:way and building=*", "geometry:polygon"]
+)
+def test_narrowed_snapshot_rows_unchanged(db, flt):
+    def view(f):
+        return (
+            SnapshotView.on(db).timestamps(TS)
+            .area_of_interest(bbox=NARROW_BBOX).filter(f)
+        )
+
+    got = _rows(view(flt).dataframe())
+    want = _rows(view(parse_filter(flt, TR).osm_column()).dataframe())
+    assert got
+    assert got == want
+
+
+def test_empty_type_set_snapshot_is_empty(db):
+    v = SnapshotView.on(db).timestamps(TS).filter("type:node and type:way")
+    assert v.count() == 0
+
+
+def test_narrowed_node_contribution_rows_unchanged(db):
+    def view(f):
+        return (
+            ContributionView.on(db)
+            .timestamps([T0, T1])
+            .area_of_interest(bbox=NARROW_BBOX)
+            .filter(f)
+        )
+
+    got = _rows(view("type:node").dataframe())
+    want = _rows(view(F.col("type") == "node").dataframe())
+    assert got
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# timestamps(): ISO strings and epoch seconds (the entities' unit) agree
+# ---------------------------------------------------------------------------
+
+
+def _secs(iso: str) -> int:
+    return parse_iso(iso) // 1_000_000
+
+
+def test_timestamps_setter_iso_is_epoch_seconds(db):
+    iso = SnapshotView.on(db).timestamps("2012-01-01", "2018-01-01", "P2Y")
+    secs = [_secs(f"{y}-01-01") for y in (2012, 2014, 2016, 2018)]
+    assert list(iso.state.ts) == secs
+    assert SnapshotView.on(db).timestamps(secs[0], secs[-1], "P2Y").state.ts \
+        == iso.state.ts
+    assert SnapshotView.on(db).timestamps(
+        ["2012-01-01", secs[1]]
+    ).state.ts == tuple(secs[:2])
+    by_secs = SnapshotView.on(db).timestamps(secs)
+    got = _rows(iso.filter("type:node").dataframe())
+    assert got
+    assert got == _rows(by_secs.filter("type:node").dataframe())
+
+
+def test_timestamps_setter_iso_contribution(db):
+    iso = ContributionView.on(db).timestamps("2011-01-01", "2019-01-01")
+    secs = ContributionView.on(db).timestamps(
+        [_secs("2011-01-01"), _secs("2019-01-01")]
+    )
+    assert iso.state.ts == secs.state.ts
+    got = _rows(iso.filter("type:way").dataframe())
+    assert got
+    assert got == _rows(secs.filter("type:way").dataframe())

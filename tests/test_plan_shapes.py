@@ -135,3 +135,100 @@ def test_spacetime_k_single_aggregate_no_extra_shuffle(spark):
     # (two sides of one SortMergeJoin/ShuffledHashJoin) + one 1-row agg
     assert plan.count("FlatMapGroupsInPandas") == 0
     assert _no_python(plan)
+
+
+# ---------------------------------------------------------------------------
+# type-narrowed views (MapReducer.java:1910-1935): a node-only view plans no
+# way/relation branch, and its bbox clip and WKT stage stay in the JVM
+# ---------------------------------------------------------------------------
+
+_ENT_SCHEMA = (
+    "doc_id string, id long, type string, version int, visible boolean, "
+    "ts long, changeset long, uid int, tags map<int,int>, lon long, lat long, "
+    "refs array<long>, members array<struct<type:string,ref:long,role:string>>"
+)
+_BBOX = (0.0, 0.0, 20.0, 20.0)
+
+
+def _narrow_db(spark):
+    from oshdb_spark.api import OSHDB
+
+    rows = [
+        ("n1", 1, "node", 1, True, 100, 1, 1, {}, 10_0000000, 10_0000000,
+         None, None),
+        ("n2", 2, "node", 1, True, 100, 1, 1, {}, 30_0000000, 10_0000000,
+         None, None),
+        ("n3", 3, "node", 1, True, 100, 1, 1, {}, 30_0000000, 30_0000000,
+         None, None),
+        ("w1", 10, "way", 1, True, 100, 1, 1, {2: 1}, None, None,
+         [1, 2, 3, 1], None),
+        ("r1", 20, "relation", 1, True, 100, 1, 1, {}, None, None, None,
+         [("way", 10, "outer")]),
+    ]
+    return OSHDB(spark, spark.createDataFrame(rows, _ENT_SCHEMA))
+
+
+def test_node_only_views_have_no_python_nodes(spark):
+    from oshdb_spark.api import ContributionView, SnapshotView
+
+    db = _narrow_db(spark)
+
+    def snap(flt):
+        return (
+            SnapshotView.on(db).timestamps([150])
+            .area_of_interest(bbox=_BBOX).filter(flt)
+        )
+
+    def contrib(flt):
+        return (
+            ContributionView.on(db).timestamps([0, 200])
+            .area_of_interest(bbox=_BBOX).filter(flt)
+        )
+
+    for view in (snap, contrib):
+        for df in (
+            view("type:node").dataframe(),
+            view("type:node").aggregate_by_timestamp().count(),
+        ):
+            plan = _plan(df)
+            assert _no_python(plan), (
+                f"Python eval node leaked into:\n{plan[:2000]}"
+            )
+        # with ways in the type set the clip UDF runs: the check above is
+        # not vacuous
+        assert not _no_python(_plan(view("type:way or type:node").dataframe()))
+
+
+def _jobs_while(spark, build) -> list[int]:
+    """Spark job ids submitted while ``build()`` runs, via a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-shape-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "plan-shape job count")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_narrowed_snapshot_reducer_submits_no_jobs(spark):
+    """Building the reducer DataFrame of a node- or way-only snapshot view
+    runs no Spark job: the relation nesting probe is skipped."""
+    from oshdb_spark.api import SnapshotView
+
+    db = _narrow_db(spark)
+
+    def reducer(flt):
+        return lambda: (
+            SnapshotView.on(db).timestamps([150])
+            .area_of_interest(bbox=_BBOX).filter(flt)
+            .aggregate_by_timestamp().count()
+        )
+
+    assert _jobs_while(spark, reducer("type:node")) == []
+    assert _jobs_while(spark, reducer("type:way")) == []
+    # with relations in the type set the nesting probe runs a job
+    assert _jobs_while(spark, reducer("type:relation")) != []

@@ -401,3 +401,70 @@ def test_way_geometry_udf_vectorized_parity(spark):
         assert r["length"] == l, (rid, r["length"], l)
         assert (r["minx"], r["miny"], r["maxx"], r["maxy"]) == (
             mnx, mny, mxx, mxy), rid
+
+
+# ---------------------------------------------------------------------------
+# type narrowing (MapReducer.java:1910-1935): a narrowed view equals the
+# full view filtered to the requested kinds
+# ---------------------------------------------------------------------------
+
+NARROW_BBOX = (8.0, 49.0, 9.2, 49.8)
+
+
+def _snapshot_rows(df):
+    """Collected rows as sortable, comparable tuples (maps as item lists)."""
+    def norm(v):
+        return sorted(v.items()) if isinstance(v, dict) else v
+
+    rows = [
+        tuple((k, norm(v)) for k, v in sorted(r.asDict().items()))
+        for r in df.collect()
+    ]
+    return sorted(rows, key=lambda t: [
+        v for k, v in t if k in ("type", "id", "version", "snap_ts")
+    ])
+
+
+@pytest.fixture(scope="module")
+def nested_entities(spark, entities, docs_parquet):
+    """The docs world plus a super-relation over one of its multipolygons
+    and ways, so the nesting-level path runs."""
+    _, _, world = docs_parquet
+    rel = int(world.relations["id"].iloc[0])
+    way = int(world.ways["id"].iloc[0])
+    extra = [
+        _mk("nest-1", 9_000_001, "relation", 1, True, TS[1], members=[
+            ("relation", rel, ""), ("way", way, "")]),
+    ]
+    return entities.unionByName(
+        spark.createDataFrame(extra, NEST_SCHEMA)
+    ).cache()
+
+
+@pytest.fixture(scope="module")
+def full_bbox_rows(nested_entities):
+    return _snapshot_rows(
+        snapshot_view(nested_entities, TS, bbox_deg=NARROW_BBOX)
+    )
+
+
+@pytest.mark.parametrize(
+    "types",
+    [{"node"}, {"way"}, {"relation"}, {"node", "way"}, {"way", "relation"}],
+    ids=lambda t: "+".join(sorted(t)),
+)
+def test_type_narrowed_snapshot_equals_filtered_full_view(
+    nested_entities, full_bbox_rows, types
+):
+    got = _snapshot_rows(
+        snapshot_view(nested_entities, TS, bbox_deg=NARROW_BBOX, types=types)
+    )
+    want = [r for r in full_bbox_rows if dict(r)["type"] in types]
+    assert want
+    assert {dict(r)["type"] for r in want} == types
+    assert got == want
+
+
+def test_nested_fixture_reaches_super_relations(full_bbox_rows):
+    ids = {dict(r)["id"] for r in full_bbox_rows}
+    assert 9_000_001 in ids
